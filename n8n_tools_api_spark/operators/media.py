@@ -9,8 +9,8 @@ upload fails (fallback_to_base64). Spark restatement:
    (``sha2(unbase64(text), 256)`` — byte-identical to Python hashlib);
 2. ``dropDuplicates`` on the hash (A10 — the reference gets dedup
    implicitly from identical object keys);
-3. write each distinct blob once (foreachPartition writer / Iceberg
-   blob table — here a parquet blob table);
+3. write each distinct blob once — the deployment's sink
+   (foreachPartition writer / the Iceberg ``MEDIA_BLOBS_DDL`` table);
 4. broadcast-join the (hash → media_ref) map back onto the spans (J2)
    with ``coalesce`` keeping the inline payload for unmapped spans
    (the fallback_to_base64 path, ocr_s3_processor.py:693-699).
@@ -56,15 +56,6 @@ def distinct_media_blobs(docs: DataFrame, prefix: str = "media") -> DataFrame:
         )
         .dropDuplicates(["media_key"])
     )
-
-
-def write_blob_table(blobs: DataFrame, path: str) -> None:
-    """Blob sink: one parquet table keyed by media_key.
-
-    On a cluster this is the S3/Iceberg blob table; the content-hash key
-    makes the write idempotent (re-runs overwrite identical bytes).
-    """
-    blobs.write.mode("overwrite").parquet(path)
 
 
 def media_upload_stats(extracted: DataFrame, blobs: DataFrame) -> DataFrame:

@@ -70,9 +70,9 @@ def _doc_reqs(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
     """Deterministic request rows derived from the documents table
     (doc_id < 40) — single-sourced so the three table-derived oracle
     queries can't drift from their SQL twins independently."""
-    from .catalog import _t
+    from n8n_tools_api_spark.sources.tables import read_sf_table
 
-    return _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
+    return read_sf_table(spark, sf_dir, "documents", below=40).select(
         F.col("doc_id").alias("req_id"), *cols
     )
 

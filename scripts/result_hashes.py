@@ -44,7 +44,8 @@ def main() -> None:
     ap.add_argument("--queries", default="")
     ap.add_argument("--compare", nargs=2, default=None)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS")
+                                or os.cpu_count() or 1))
     args = ap.parse_args()
 
     if args.compare:

@@ -103,6 +103,17 @@ class TestBpeLearn:
         b = bpe_learn(df.repartition(13), 6).orderBy("rank").collect()
         assert list(map(tuple, a)) == list(map(tuple, b))
 
+    def test_reliable_mode_writes_no_final_round(self, spark, tmp_path):
+        # the last round's words are never read, so reliable mode must
+        # not write them — and its merges equal local mode's
+        corpus = ["low " * 5 + "lower " * 2 + "newest " * 6 + "widest " * 3]
+        k = 4
+        reliable = _learn(spark, corpus, k, checkpoint_dir=str(tmp_path))
+        assert reliable == _learn(spark, corpus, k)
+        assert len(reliable) == k
+        assert not list(tmp_path.rglob(f"bpe_round{k}"))
+        assert list(tmp_path.rglob("bpe_round*"))  # reliable mode ran
+
     def test_validation(self, spark):
         from n8n_tools_api_spark.operators.bpe import bpe_learn
 
