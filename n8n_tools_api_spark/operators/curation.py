@@ -1,16 +1,22 @@
-"""Composed curation pipeline — the engine's end-to-end product story.
+"""Composed curation pipelines — the engine's end-to-end product story.
 
-One flow: extract → clean (F1, inside extraction) → exact content-hash
-dedup (A10) → near-dup pair generation → connected components →
-canonical keep-list. Per input document the output says what the
-curated corpus does with it::
+Every keep-list builder here (and ``lm_ppx.ccnet_keep_list``) returns
+the reference's per-document output contract: ONE disposition row per
+input document, ``(doc_id, status, canonical, ...)``. Each builder is
+an ordered list of stages run by :func:`_ladder`:
 
-    (doc_id, status 'kept' | 'exact_dup' | 'near_dup', canonical)
+* a stage judges only the rows still ``kept`` by the stages before it,
+  so the first reject wins and a rejected doc never reaches a later
+  (costlier) stage;
+* ``canonical`` is the surviving representative for a duplicate (the
+  first-by-id exact twin, the component minimum, the URL group's first
+  doc), the doc itself when kept, and NULL for every rejection;
+* a payload column (score, line counters, …) is NULL for any doc that
+  never reached the stage that computes it.
 
-where ``canonical`` is the surviving representative (itself for kept
-docs, the first-by-id exact twin, or the component minimum).
-
-Two near-dup strategies share everything else:
+The core chain is extract → clean (F1, inside extraction) → exact
+content-hash dedup (A10) → near-dup pair generation → connected
+components, with two near-dup strategies:
 
 * ``use_lsh=False`` — exact n-gram Jaccard over all survivor pairs.
   Fully DuckDB-replayable, so the whole composed flow is oracle-checked
@@ -28,9 +34,50 @@ bytes never enter this flow — it runs on extracted text only.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _ladder(docs: DataFrame, stages: list, columns: list[str],
+            checkpoint_dir: str | None = None) -> DataFrame:
+    """Run ``stages`` — ``(name, judge)`` pairs — over ``docs`` and
+    return the disposition log projected to ``columns``.
+
+    A judge takes the rows still kept (the previous stage's payload
+    columns, without ``status``/``canonical``) and returns them with
+    ``status``, ``canonical`` where it has one, and the payload later
+    stages read. Rows not ``kept`` go to the log, and so does every row
+    of the last stage. A column a stage does not emit is NULL in its
+    log rows.
+
+    Every stage but the last feeds two consumers (the log and the next
+    stage), so its output is cut once via RoundMaterializer under
+    ``checkpoint_dir`` (parquet rounds; a localCheckpoint without it).
+    Every cut is deferred: the first job that reads it computes its
+    blocks (a later stage's own job, or the log's), and every later
+    reader gets the cached blocks, so a cut costs no job of its own.
+    """
+    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
+
+    mat = RoundMaterializer(checkpoint_dir)
+    rows, log = docs, []
+    *cut, (_, last) = stages
+    for name, judge in cut:
+        judged = mat(judge(rows), name, eager=False)
+        log.append(judged.where(F.col("status") != "kept"))
+        rows = judged.where(F.col("status") == "kept") \
+            .drop("status", "canonical")
+    log.append(last(rows))
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  log).select(*columns)
+
+
+def _verdict(keep, reject: str):
+    """``'kept'`` where ``keep`` holds, else the ``reject`` status."""
+    return F.when(keep, F.lit("kept")).otherwise(F.lit(reject))
 
 
 def cleaned_documents(docs: DataFrame) -> DataFrame:
@@ -60,134 +107,137 @@ def cleaned_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
-                       threshold: float = 0.5, k: int = 5,
-                       checkpoint_dir: str | None = None) -> DataFrame:
-    """Full curation flow over (doc_id string, text string) documents.
+def _exact(rows: DataFrame) -> DataFrame:
+    """Exact content-hash dedup on the extraction-cleaned text: the
+    first doc_id of each md5 group is kept, the rest are ``exact_dup``
+    of it. Payload: ``clean_text`` for the near-dup stage."""
+    cleaned = cleaned_documents(rows)
+    if set(rows.columns) != {"doc_id", "text"}:
+        # extraction returns (doc_id, clean_text) only: join back the
+        # payload a later stage reads (web: host, the C4-clean text)
+        cleaned = rows.join(cleaned, "doc_id")
+    w = Window.partitionBy("h").orderBy("doc_id")
+    return (
+        cleaned.withColumn("h", F.md5(F.col("clean_text").cast("binary")))
+        .withColumns({
+            "status": _verdict(F.row_number().over(w) == 1, "exact_dup"),
+            "canonical": F.first("doc_id").over(w),
+        })
+        .drop("h")
+    )
 
-    Returns (doc_id, status, canonical) for EVERY input document,
-    ordered by the caller. See module docstring for the two strategies.
 
-    ``checkpoint_dir`` makes every intermediate materialization
-    reliable (parquet on shared storage instead of executor-local
-    blocks — operators/materialize.py): the ranked frame, the LSH
-    banded frame, and every components round. Default localCheckpoint
-    is right on local[k]; on a 1000-executor cluster a lost executor
-    would otherwise kill the multi-hour run mid-loop (round-3 verdict
-    #2).
-    """
+def _near(use_lsh: bool, threshold: float, k: int,
+          checkpoint_dir: str | None):
+    """Near-dup components over ``clean_text``: a doc whose component
+    minimum is another doc is ``near_dup`` of it."""
     from n8n_tools_api_spark.operators.dedup import (
         minhash_lsh_candidates,
         near_dup_components,
         ngram_jaccard_pairs,
     )
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
-    cleaned = cleaned_documents(docs)
-    w = Window.partitionBy("h").orderBy("doc_id")
-    # materialize the ranked frame ONCE: the survivor branch feeds the
-    # jaccard self-join (and the LSH candidate join, and every
-    # components round) while the exact_dup branch is unioned back at
-    # the end — without this the pandas-UDF extraction + hash window
-    # would execute once per consumer (measured: a full duplicate
-    # extraction pass in the suite-3 bench)
-    ranked = mat(
-        cleaned.withColumn("h", F.md5(F.col("clean_text").cast("binary")))
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("canon_exact", F.first("doc_id").over(w)),
-        "ranked",
-    )
-    survivors = ranked.where(F.col("rn") == 1).select("doc_id", "clean_text")
-    if use_lsh:
-        cands = (
-            minhash_lsh_candidates(survivors, text_col="clean_text",
-                                   checkpoint_banded=True,
-                                   checkpoint_dir=checkpoint_dir)
-            .where(F.col("n_shared_bands") >= 2)
-            .select("doc_a", "doc_b")
-        )
+    def judge(rows: DataFrame) -> DataFrame:
+        survivors = rows.select("doc_id", "clean_text")
+        cands = None
+        if use_lsh:
+            cands = (
+                minhash_lsh_candidates(survivors, text_col="clean_text",
+                                       checkpoint_banded=True,
+                                       checkpoint_dir=checkpoint_dir)
+                .where(F.col("n_shared_bands") >= 2)
+                .select("doc_a", "doc_b")
+            )
+        # the shingle cut keeps the explode over the survivors from
+        # executing once per consumer (df-cap build, per-doc sizes and
+        # both self-join sides)
         pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
                                     threshold=threshold,
                                     candidate_pairs=cands,
                                     checkpoint_shingles=True,
                                     checkpoint_dir=checkpoint_dir)
-    else:
-        # cut the capped shingle stream (the "cand" mode): without it
-        # the explode over the cleaned survivors executes once per
-        # consumer — df-cap build, per-doc sizes, and BOTH self-join
-        # sides (four concurrent exchanges in the profile)
-        pairs = ngram_jaccard_pairs(survivors, text_col="clean_text", k=k,
-                                    threshold=threshold,
-                                    checkpoint_shingles=True,
-                                    checkpoint_dir=checkpoint_dir)
-    comp = near_dup_components(pairs.select("doc_a", "doc_b"),
-                               checkpoint_dir=checkpoint_dir)
-    surv_out = (
-        survivors.join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(
-                F.col("component").isNotNull()
-                & (F.col("component") != F.col("doc_id")),
-                F.lit("near_dup"),
-            ).otherwise(F.lit("kept")).alias("status"),
-            F.coalesce("component", F.col("doc_id")).alias("canonical"),
+        comp = near_dup_components(pairs.select("doc_a", "doc_b"),
+                                   checkpoint_dir=checkpoint_dir)
+        return (
+            rows.drop("clean_text").join(comp, "doc_id", "left")
+            .withColumns({
+                "status": _verdict(
+                    F.col("component").isNull()
+                    | (F.col("component") == F.col("doc_id")), "near_dup"),
+                "canonical": F.coalesce("component", F.col("doc_id")),
+            })
+            .drop("component")
         )
+
+    return judge
+
+
+def _dedup(use_lsh, threshold, k, checkpoint_dir) -> list:
+    """The dedup stages every curation chain shares: exact → near."""
+    return [("exact", _exact),
+            ("near", _near(use_lsh, threshold, k, checkpoint_dir))]
+
+
+def _gopher(rows: DataFrame) -> DataFrame:
+    """The Gopher repetition gates → ``rejected_quality``."""
+    from n8n_tools_api_spark.operators.textstats import gopher_repetition
+
+    return (
+        rows.join(gopher_repetition(rows).select("doc_id", "gopher_keep"),
+                  "doc_id")
+        .withColumn("status",
+                    _verdict(F.col("gopher_keep"), "rejected_quality"))
+        .drop("gopher_keep")
     )
-    exact_out = ranked.where(F.col("rn") > 1).select(
-        "doc_id",
-        F.lit("exact_dup").alias("status"),
-        F.col("canon_exact").alias("canonical"),
-    )
-    return surv_out.unionByName(exact_out)
+
+
+def _c4(rows: DataFrame) -> DataFrame:
+    """The C4 line cleaning and page gate → ``rejected_c4``; ``text``
+    becomes the C4-cleaned text every later stage reads."""
+    from n8n_tools_api_spark.operators.textstats import c4_line_columns
+
+    c4 = c4_line_columns(F.col("text"))
+    return rows.withColumns({
+        "text": c4["clean_text"],
+        "status": _verdict(c4["c4_keep"], "rejected_c4"),
+    })
+
+
+def curation_keep_list(docs: DataFrame, use_lsh: bool = False,
+                       threshold: float = 0.5, k: int = 5,
+                       checkpoint_dir: str | None = None) -> DataFrame:
+    """Curation over (doc_id string, text string) documents — stages
+    exact → near; statuses ``kept`` / ``exact_dup`` / ``near_dup``. See
+    the module docstring for the two near-dup strategies.
+
+    ``checkpoint_dir`` makes every intermediate materialization
+    reliable (parquet on shared storage instead of executor-local
+    blocks — operators/materialize.py): the exact-stage cut, the LSH
+    banded frame, and every components round. Default localCheckpoint
+    is right on local[k]; on a 1000-executor cluster a lost executor
+    would otherwise kill the multi-hour run mid-loop (round-3 verdict
+    #2).
+    """
+    return _ladder(docs, _dedup(use_lsh, threshold, k, checkpoint_dir),
+                   ["doc_id", "status", "canonical"], checkpoint_dir)
 
 
 def curation_with_quality(docs: DataFrame, use_lsh: bool = False,
                           threshold: float = 0.5, k: int = 5,
                           checkpoint_dir: str | None = None) -> DataFrame:
-    """Quality-first curation: the Gopher repetition gates
-    (operators/textstats.py::gopher_repetition, Rae et al. 2021 A1.1)
-    run on the RAW text BEFORE the expensive extraction/dedup stages —
-    the order every large-scale pipeline uses, because a rejected doc
-    costs one cheap aggregate instead of the full flow. Output adds a
-    fourth status::
-
-        (doc_id, 'rejected_quality' | 'kept' | 'exact_dup' | 'near_dup',
-         canonical)   -- canonical NULL for quality rejections
-
-    Rejected docs never reach the dedup stages, so a repetitive doc
-    cannot become some cleaner doc's canonical. Oracle-checked
-    end-to-end (``curation_quality_keep_list`` chains the Gopher
-    DuckDB replay into the curation chain replay).
+    """Quality-first curation — stages gopher → exact → near. The
+    Gopher repetition gates (operators/textstats.py::gopher_repetition,
+    Rae et al. 2021 A1.1) run on the RAW text BEFORE the expensive
+    extraction/dedup stages — the order every large-scale pipeline
+    uses, because a rejected doc costs one cheap aggregate instead of
+    the full flow — and reject as ``rejected_quality``. A repetitive
+    doc therefore cannot become some cleaner doc's canonical.
+    Oracle-checked end-to-end (``curation_quality_keep_list`` chains
+    the Gopher DuckDB replay into the curation chain replay).
     """
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
-    from n8n_tools_api_spark.operators.textstats import gopher_repetition
-
-    mat = RoundMaterializer(checkpoint_dir)
-    # deferred (eager=False): single consumer — materializes inside the
-    # first downstream job instead of paying its own job (guide §1.2:
-    # the composed chains are job-count-bound at bounded corpus sizes)
-    gates = mat(gopher_repetition(docs).select("doc_id", "gopher_keep"),
-                "gates", eager=False)
-    # materialize the joined frame before splitting: passed and rejected
-    # both consume it, and without the cut the full upstream lineage of
-    # ``docs`` (often an extraction chain) would execute once per branch
-    # — the same duplicate-execution pattern the ranked-frame
-    # materialization in curation_keep_list prevents (advice finding)
-    # deferred: first materialized by the ranked-frame job via the
-    # passed branch; the rejected branch (final union) reads the cache
-    flagged = mat(docs.join(gates, "doc_id"), "flagged", eager=False)
-    mat.release("gates")  # flagged is materialized; gates files are free
-    passed = flagged.where(F.col("gopher_keep")).select("doc_id", "text")
-    rejected = flagged.where(~F.col("gopher_keep")).select(
-        "doc_id",
-        F.lit("rejected_quality").alias("status"),
-        F.lit(None).cast("string").alias("canonical"),
-    )
-    return curation_keep_list(passed, use_lsh=use_lsh, threshold=threshold,
-                              k=k, checkpoint_dir=checkpoint_dir) \
-        .unionByName(rejected)
+    return _ladder(docs, [("gopher", _gopher)]
+                   + _dedup(use_lsh, threshold, k, checkpoint_dir),
+                   ["doc_id", "status", "canonical"], checkpoint_dir)
 
 
 def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
@@ -197,109 +247,71 @@ def classifier_curation_keep_list(docs: DataFrame, positive: DataFrame,
                                   threshold_q16: int = 0,
                                   checkpoint_dir: str | None = None,
                                   ) -> DataFrame:
-    """Dedup-then-classify curation — the DCLM / FineWeb-Edu stage
-    order: the full curation chain (extract-clean → exact dedup →
-    near-dup components) runs FIRST, and the trained quality
-    classifier (operators/qualityclf.py, the NB log-odds model) scores
-    only the surviving canonicals as the FINAL selection stage —
-    DCLM-Baseline applies its fastText filter after heuristics+dedup,
-    and FineWeb-Edu scores the already-deduplicated FineWeb. Scoring
-    after dedup means the expensive model pass runs once per unique
-    document, not once per copy.
+    """Dedup-then-classify curation — stages exact → near → classifier,
+    the DCLM / FineWeb-Edu stage order: the trained quality classifier
+    (operators/qualityclf.py, the NB log-odds model) scores only the
+    surviving canonicals as the FINAL selection stage — DCLM-Baseline
+    applies its fastText filter after heuristics+dedup, and FineWeb-Edu
+    scores the already-deduplicated FineWeb. Scoring after dedup means
+    the expensive model pass runs once per unique document, not once
+    per copy.
 
     ``positive`` / ``negative`` are the labeled training frames
     (text column ``text``), typically a curated reference slice vs a
     raw-crawl sample — the classifier trains in the same plan (two
     bounded-key aggregations; see qualityclf.py).
 
-    Output: (doc_id, status, canonical, score_q16) — statuses
-    ``exact_dup`` / ``near_dup`` (from the dedup chain, score NULL:
-    duplicates are never scored) and ``kept`` /
-    ``rejected_classifier`` (scored survivors; canonical NULL for
-    rejections, like the other rejected_* statuses). A near_dup's
-    canonical may itself be classifier-rejected — the public pipelines
-    accept this (selection happens after clustering; the cluster
-    pointer records provenance, not survival).
+    Output: (doc_id, status, canonical, score_q16); scored survivors
+    are ``kept`` or ``rejected_classifier``, and duplicates are never
+    scored. A near_dup's canonical may itself be classifier-rejected —
+    the public pipelines accept this (selection happens after
+    clustering; the cluster pointer records provenance, not survival).
     """
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
     from n8n_tools_api_spark.operators.qualityclf import (
         quality_classifier_scores)
 
-    mat = RoundMaterializer(checkpoint_dir)
-    # the curation disposition feeds the kept-branch split AND the
-    # pass-through union — cut it once or the whole dedup chain
-    # (components loop included) executes per consumer
-    cur = mat(curation_keep_list(docs, use_lsh=use_lsh,
-                                 threshold=threshold, k=k,
-                                 checkpoint_dir=checkpoint_dir),
-              "classifier_cur", eager=False)
-    kept = cur.where(F.col("status") == "kept") \
-        .select("doc_id", "canonical")
-    kept_docs = kept.select("doc_id").join(
-        docs.select("doc_id", "text"), "doc_id")
-    scored = quality_classifier_scores(
-        kept_docs, positive, negative, threshold_q16=threshold_q16)
-    kept_out = (
-        kept.join(scored.select("doc_id", "score_q16", "decision"),
-                  "doc_id")
-        .select(
+    def classifier(rows: DataFrame) -> DataFrame:
+        scored = quality_classifier_scores(
+            rows.select("doc_id").join(docs.select("doc_id", "text"),
+                                       "doc_id"),
+            positive, negative, threshold_q16=threshold_q16)
+        return scored.select(
             "doc_id",
-            F.when(F.col("decision"), F.lit("kept"))
-            .otherwise(F.lit("rejected_classifier")).alias("status"),
-            F.when(F.col("decision"), F.col("canonical"))
-            .otherwise(F.lit(None).cast("string")).alias("canonical"),
+            _verdict(F.col("decision"), "rejected_classifier")
+            .alias("status"),
+            F.when(F.col("decision"), F.col("doc_id")).alias("canonical"),
             "score_q16",
         )
-    )
-    others = cur.where(F.col("status") != "kept").select(
-        "doc_id", "status", "canonical",
-        F.lit(None).cast("bigint").alias("score_q16"))
-    return kept_out.unionByName(others)
+
+    return _ladder(docs, _dedup(use_lsh, threshold, k, checkpoint_dir)
+                   + [("classifier", classifier)],
+                   ["doc_id", "status", "canonical", "score_q16"],
+                   checkpoint_dir)
 
 
 def c4_curation_keep_list(docs: DataFrame, use_lsh: bool = False,
                           threshold: float = 0.5, k: int = 5,
                           checkpoint_dir: str | None = None) -> DataFrame:
-    """C4-first curation — the full public-pipeline stage order
-    (C4 / RefinedWeb: clean lines → quality-filter → dedup):
+    """C4-first curation — stages c4 → gopher → exact → near, the full
+    public-pipeline stage order (C4 / RefinedWeb: clean lines →
+    quality-filter → dedup):
 
     1. the C4 cleaning rules (operators/textstats.py::c4_line_filter,
        Raffel et al. 2020 §2.2) drop boilerplate lines and reject
-       lorem-ipsum / brace / fragment pages → status ``rejected_c4``
-       (canonical NULL);
+       lorem-ipsum / brace / fragment pages → ``rejected_c4``;
     2. every downstream stage consumes the C4-CLEANED text, not the raw
        page: the Gopher repetition gates (``rejected_quality``) and the
-       exact + near-dup curation chain all run on ``clean_text`` — so a
-       page whose only differences were dropped boilerplate lines
-       dedups against its clean twin (the reason real pipelines clean
-       first).
+       exact + near-dup curation chain — so a page whose only
+       differences were dropped boilerplate lines dedups against its
+       clean twin (the reason real pipelines clean first).
 
-    Output: (doc_id, 'rejected_c4' | 'rejected_quality' | 'kept' |
-    'exact_dup' | 'near_dup', canonical). Oracle-checked end-to-end
-    (plans/catalog.py ``c4_curation_keep_list`` chains the C4 replay →
-    Gopher replay → curation replay in one DuckDB query).
+    Oracle-checked end-to-end (plans/catalog.py
+    ``c4_curation_keep_list`` chains the C4 replay → Gopher replay →
+    curation replay in one DuckDB query).
     """
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
-    from n8n_tools_api_spark.operators.textstats import c4_line_filter
-
-    mat = RoundMaterializer(checkpoint_dir)
-    # materialized once (deferred): the rated frame feeds both the
-    # rejected branch and the downstream quality/dedup chain; the first
-    # downstream job performs the cut, later consumers read the cache
-    rated = mat(c4_line_filter(docs).select("doc_id", "clean_text",
-                                            "c4_keep"), "c4_rated",
-                eager=False)
-    rejected = rated.where(~F.col("c4_keep")).select(
-        "doc_id",
-        F.lit("rejected_c4").alias("status"),
-        F.lit(None).cast("string").alias("canonical"),
-    )
-    passed = rated.where(F.col("c4_keep")).select(
-        "doc_id", F.col("clean_text").alias("text"))
-    return curation_with_quality(passed, use_lsh=use_lsh,
-                                 threshold=threshold, k=k,
-                                 checkpoint_dir=checkpoint_dir) \
-        .unionByName(rejected)
+    return _ladder(docs, [("c4", _c4), ("gopher", _gopher)]
+                   + _dedup(use_lsh, threshold, k, checkpoint_dir),
+                   ["doc_id", "status", "canonical"], checkpoint_dir)
 
 
 HOST_PATTERN = r"^[a-z][a-z0-9+.-]*://([^/?#]+)"
@@ -464,10 +476,8 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
                            n_gram: int = 13,
                            checkpoint_dir: str | None = None) -> DataFrame:
     """The COMPLETE public web-curation pipeline in canon stage order —
-    what C4/RefinedWeb/FineWeb actually run end-to-end, one disposition
-    per input page::
-
-        (doc_id, status, canonical)
+    what C4/RefinedWeb/FineWeb actually run end-to-end; stages url → c4
+    → gopher → exact → near → host_cap → decontam → sample:
 
     1. URL gate (:func:`url_blocklist_filter`) — cheapest first, before
        any text is touched → ``rejected_url``;
@@ -493,85 +503,61 @@ def web_curation_keep_list(docs: DataFrame, blocked_domains: DataFrame,
     Scale shape: stage order IS the scale argument — each gate runs on
     the cheapest possible frame (URL gate on slim (id, url) rows before
     any text stage; quality gates per-row on text; dedup on hashes and
-    shingles; cap/decontam/sampling on slim survivor frames). Fat text
-    crosses a join only where a stage genuinely needs it (C4 input,
-    decontam input), always keyed by doc_id with a slim other side —
-    broadcast when it fits, AQE otherwise. Every multiply-consumed
-    frame is cut via RoundMaterializer so no upstream stage executes
-    twice; ``checkpoint_dir`` upgrades all of them to cluster-reliable
-    parquet rounds.
+    shingles; the cap on slim (id, host) rows; decontam and sampling on
+    the survivors only). Fat text crosses a join only keyed by doc_id
+    (the URL verdict, the exact stage's payload join-back, the cap
+    verdict), always with a slim other side — broadcast when it fits,
+    AQE otherwise.
     """
     from n8n_tools_api_spark.operators.decontaminate import (
         ngram_decontaminate,
     )
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
     from n8n_tools_api_spark.operators.sampling import (
         sample_key, sample_threshold_hex,
     )
-    from n8n_tools_api_spark.operators.textstats import c4_line_filter
 
-    def _status(frame, status):
-        return frame.select(
-            "doc_id", F.lit(status).alias("status"),
-            F.lit(None).cast("string").alias("canonical"))
+    def url(rows):
+        gate = url_blocklist_filter(rows.select("doc_id", "url"),
+                                    blocked_domains, blocked_terms)
+        return rows.select("doc_id", "text").join(gate.select(
+            "doc_id", "host",
+            _verdict(F.col("status") == "kept", "rejected_url")
+            .alias("status")), "doc_id")
 
-    mat = RoundMaterializer(checkpoint_dir)
-    # deferred cuts (eager=False): each is first materialized inside a
-    # downstream job where it appears exactly once, so the cut still
-    # prevents re-execution across consumers but costs no job of its
-    # own (dec stays eager: the final union consumes it on two
-    # branches within ONE job, which a deferred cut can't dedup)
-    urlstat = mat(url_blocklist_filter(
-        docs.select("doc_id", "url"), blocked_domains, blocked_terms)
-        .select("doc_id", "host", "status"), "urlstat", eager=False)
-    rejected_url = _status(
-        urlstat.where(F.col("status") != "kept"), "rejected_url")
+    def cap(rows):
+        # the host from url_blocklist_filter is already canonical — pass
+        # it through the host_col seam so per_host_cap can't strip a
+        # second 'www.' / ':port' and merge hosts the oracle keeps
+        # distinct
+        capped = per_host_cap(rows.select("doc_id", "host"), cap=host_cap,
+                              host_col="host")
+        return (
+            rows.drop("host")
+            .join(capped.select("doc_id", "host_rank"), "doc_id", "left")
+            .withColumn("status", _verdict(F.col("host_rank").isNotNull(),
+                                           "rejected_host_cap"))
+            .drop("host_rank")
+        )
 
-    survivors = docs.select("doc_id", "text").join(
-        urlstat.where(F.col("status") == "kept").select("doc_id"), "doc_id")
-    rated = mat(c4_line_filter(survivors)
-                .select("doc_id", "clean_text", "c4_keep"), "c4_rated",
-                eager=False)
-    rejected_c4 = _status(rated.where(~F.col("c4_keep")), "rejected_c4")
+    def decontam(rows):
+        return ngram_decontaminate(rows, bench, n=n_gram).select(
+            "doc_id", _verdict(~F.col("contaminated"), "contaminated")
+            .alias("status"))
 
-    passed = rated.where(F.col("c4_keep")).select(
-        "doc_id", F.col("clean_text").alias("text"))
-    cur = mat(curation_with_quality(passed, use_lsh=use_lsh,
-                                    threshold=threshold, k=k,
-                                    checkpoint_dir=checkpoint_dir), "cur",
-              eager=False)
-    dup_or_rejected = cur.where(F.col("status") != "kept")
+    def sample(rows):
+        keep = sample_key(F.col("doc_id"), sample_seed) < \
+            F.lit(sample_threshold_hex(sample_rate))
+        return rows.select(
+            "doc_id", _verdict(keep, "sampled_out").alias("status"),
+            F.when(keep, F.col("doc_id")).alias("canonical"))
 
-    hostkept = cur.where(F.col("status") == "kept").select("doc_id").join(
-        urlstat.select("doc_id", "host"), "doc_id")
-    # the host from url_blocklist_filter is already canonical — pass it
-    # through the host_col seam so per_host_cap can't strip a second
-    # 'www.' / ':port' and merge hosts the oracle keeps distinct
-    capped = per_host_cap(hostkept, cap=host_cap, host_col="host")
-    rejected_cap = _status(
-        hostkept.join(capped.select("doc_id"), "doc_id", "left_anti"),
-        "rejected_host_cap")
-
-    capped_text = capped.select("doc_id").join(
-        rated.select("doc_id", F.col("clean_text").alias("text")), "doc_id")
-    dec = mat(ngram_decontaminate(capped_text, bench, n=n_gram), "decontam")
-    contaminated = _status(dec.where(F.col("contaminated")), "contaminated")
-
-    survivors_final = dec.where(~F.col("contaminated")).select("doc_id")
-    keep = sample_key(F.col("doc_id"), sample_seed) < \
-        F.lit(sample_threshold_hex(sample_rate))
-    kept = survivors_final.where(keep).select(
-        "doc_id", F.lit("kept").alias("status"),
-        F.col("doc_id").alias("canonical"))
-    sampled_out = _status(survivors_final.where(~keep), "sampled_out")
-
-    return (rejected_url
-            .unionByName(rejected_c4)
-            .unionByName(dup_or_rejected)
-            .unionByName(rejected_cap)
-            .unionByName(contaminated)
-            .unionByName(sampled_out)
-            .unionByName(kept))
+    return _ladder(
+        docs,
+        [("url", url), ("c4", _c4), ("gopher", _gopher)]
+        + _dedup(use_lsh, threshold, k, checkpoint_dir)
+        + [("host_cap", cap), ("decontam", decontam),
+           ("sample", sample)],
+        ["doc_id", "status", "canonical"], checkpoint_dir)
 
 
 TRACKING_PARAM_NAMES = ["fbclid", "gclid", "mc_cid", "mc_eid", "msclkid",
@@ -683,87 +669,76 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
              "group_size")
 
 
-def web_dedup_keep_list(docs: DataFrame, url_col: str = "url",
-                        text_col: str = "text", id_col: str = "doc_id",
-                        min_doc_freq: int = 2,
+def web_dedup_keep_list(docs: DataFrame, min_doc_freq: int = 2,
                         checkpoint_dir: str | None = None) -> DataFrame:
     """The dedup LADDER of the public web-curation canon composed in
-    its published stage order — cheapest gate first, each stage seeing
-    only the previous stage's survivors (RefinedWeb §3.2 runs exactly
-    this ladder: URL dedup at fetch time, then line-wise corrections,
-    then document-level exact/fuzzy dedup):
+    its published stage order — cheapest gate first (RefinedWeb §3.2
+    runs exactly this ladder: URL dedup at fetch time, then line-wise
+    corrections, then document-level exact/fuzzy dedup). Three stages
+    over (doc_id, url, text) documents:
 
-    1. :func:`url_dedup` — canonical-URL dedup (no text touched; a
-       recrawl costs one slim window row);
-    2. :func:`~n8n_tools_api_spark.operators.dedup.strip_repeated_lines`
-       — within-doc repeated-line removal (zero shuffle);
-    3. :func:`~n8n_tools_api_spark.operators.dedup.line_dedup` —
-       cross-doc boilerplate-line removal over the CLEANED text;
-    4. exact full-text dedup on the post-cleaning text (md5 window,
-       min-id canonical) — two pages that differed only by nav chrome
-       and repeated headers collapse HERE, which is the reason the
-       line stages run first.
+    1. url_dedup — :func:`url_dedup`, canonical-URL dedup (no text
+       touched; a recrawl costs one slim window row) → ``url_dup`` of
+       the URL group's first doc;
+    2. strip_lines —
+       :func:`~n8n_tools_api_spark.operators.dedup.strip_repeated_lines`,
+       within-doc repeated-line removal (zero shuffle); rejects nothing;
+    3. boiler_lines_exact_text —
+       :func:`~n8n_tools_api_spark.operators.dedup.line_dedup`
+       (cross-doc boilerplate-line removal over the stripped text), then
+       exact full-text dedup on the post-cleaning text (md5 window,
+       min-id canonical) → ``exact_dup`` — two pages that differed
+       only by nav chrome and repeated headers collapse HERE, which is
+       the reason the line stages run first.
 
-    Output, one row per input doc::
+    Output: (doc_id, status, canonical, lines_dropped_within,
+    lines_dropped_boiler); the line counters are NULL for url_dup rows
+    (their text was never processed — that IS the saving). Docs whose
+    text cleans to ``''`` (boilerplate-only pages) form one exact-dup
+    group of the empty text, min-id kept — the documented
+    pseudo-group, same convention as url_dedup's NULL URLs.
 
-        (doc_id, status 'url_dup' | 'exact_dup' | 'kept', canonical,
-         lines_dropped_within, lines_dropped_boiler)
-
-    ``canonical`` is the stage-appropriate survivor (URL group first
-    doc / exact-text group min doc / itself); the line counters are
-    NULL for url_dup rows (their text was never processed — that IS
-    the saving).  Docs whose text cleans to ``''`` (boilerplate-only
-    pages) form one exact-dup group of the empty text, min-id kept —
-    the documented pseudo-group, same convention as url_dedup's NULL
-    URLs.
-
-    Scale shape: stage 1 exchanges only (id, canonical-url) rows;
-    stage 2 rides the scan; stage 3 exchanges slim (doc_id, q, h)
-    line-key rows (AQE-split hot boilerplate keys); stage 4 exchanges
-    (doc_id, md5) pairs.  Full text never rides a key-keyed shuffle
-    in any stage.
-
-    Both multiply-consumed frames are cut (lazily in local mode;
-    parquet rounds under ``checkpoint_dir`` on a cluster): the
-    url_dedup window feeds the url_dup branch AND the survivors join,
-    and strip_repeated_lines feeds line_dedup AND the counters join —
-    without the cut each consumer re-executes the upstream stage.
+    Scale shape: stage 1 exchanges only (id, canonical-url) rows, then
+    joins its verdict onto the text by doc_id; the line stripping rides
+    the scan; line_dedup exchanges slim (doc_id, q, h) line-key rows
+    (AQE-split hot boilerplate keys); the exact window exchanges
+    (doc_id, md5) pairs. Full text never rides a key-keyed shuffle in
+    any stage.
     """
     from n8n_tools_api_spark.operators.dedup import (
         line_dedup, strip_repeated_lines)
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
 
-    mat = RoundMaterializer(checkpoint_dir)
-    u = mat(url_dedup(docs.select(F.col(id_col).alias("doc_id"),
-                                  F.col(url_col).alias("url"))),
-            "url_dedup", eager=False)
-    url_dups = u.where(F.col("status") == "url_dup").select(
-        "doc_id", F.lit("url_dup").alias("status"),
-        F.col("first_doc").alias("canonical"),
-        F.lit(None).cast("int").alias("lines_dropped_within"),
-        F.lit(None).cast("int").alias("lines_dropped_boiler"),
-    )
-    survivors = docs.select(F.col(id_col).alias("doc_id"),
-                            F.col(text_col).alias("text")) \
-        .join(u.where(F.col("status") == "kept").select("doc_id"), "doc_id")
-    within = mat(strip_repeated_lines(survivors), "within", eager=False)
-    boiler = line_dedup(
-        within.select("doc_id", F.col("clean_text").alias("text")),
-        min_doc_freq=min_doc_freq)
-    cleaned = (
-        within.select("doc_id",
-                      F.col("n_removed").alias("lines_dropped_within"))
-        .join(boiler.select(
-            "doc_id", "clean_text",
-            F.col("n_removed").alias("lines_dropped_boiler")), "doc_id")
-    )
-    w = Window.partitionBy("h")
-    exact = cleaned.withColumn(
-        "h", F.md5(F.col("clean_text").cast("binary"))
-    ).withColumn("canonical", F.min("doc_id").over(w)).select(
-        "doc_id",
-        F.when(F.col("doc_id") == F.col("canonical"), F.lit("kept"))
-        .otherwise(F.lit("exact_dup")).alias("status"),
-        "canonical", "lines_dropped_within", "lines_dropped_boiler",
-    )
-    return url_dups.unionByName(exact)
+    def url(rows):
+        u = url_dedup(rows.select("doc_id", "url"))
+        return rows.select("doc_id", "text").join(u.select(
+            "doc_id", "status", F.col("first_doc").alias("canonical")),
+            "doc_id")
+
+    def strip_lines(rows):
+        # its own stage so that line_dedup (which reads its input
+        # twice) and the counter join read the stripped text from the
+        # cut instead of re-stripping it per reader
+        return strip_repeated_lines(rows).select(
+            "doc_id", F.col("clean_text").alias("text"),
+            F.col("n_removed").alias("lines_dropped_within"),
+            F.lit("kept").alias("status"))
+
+    def boiler_lines_exact_text(rows):
+        boiler = line_dedup(rows, min_doc_freq=min_doc_freq)
+        cleaned = rows.select("doc_id", "lines_dropped_within").join(
+            boiler.select("doc_id", "clean_text",
+                          F.col("n_removed").alias("lines_dropped_boiler")),
+            "doc_id")
+        w = Window.partitionBy("h")
+        return cleaned.withColumn(
+            "h", F.md5(F.col("clean_text").cast("binary"))
+        ).withColumn("canonical", F.min("doc_id").over(w)).withColumn(
+            "status", _verdict(F.col("doc_id") == F.col("canonical"),
+                               "exact_dup"))
+
+    return _ladder(docs, [("url_dedup", url), ("strip_lines", strip_lines),
+                          ("boiler_lines_exact_text",
+                           boiler_lines_exact_text)],
+                   ["doc_id", "status", "canonical",
+                    "lines_dropped_within", "lines_dropped_boiler"],
+                   checkpoint_dir)

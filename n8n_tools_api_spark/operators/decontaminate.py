@@ -25,36 +25,31 @@ oracle in plans/catalog.py):
 
 Scale shape: the benchmark side is an eval suite — thousands to a few
 million grams — so it broadcasts; the document side is one narrow
-projection (per-row gram fold, ``array_distinct`` per row, NO
-(doc, gram) shuffle), then an explode feeding a broadcast hash join in
-which only the grams that actually HIT the benchmark survive to the
-doc-keyed count (map-side combined, proportional to contamination, not
-corpus size). The join-back of per-doc hit counts is itself broadcast
-(hits ≤ contaminated docs). At 100 TB nothing wide moves: the only
-exchanges carry (doc_id, partial count) for contaminated docs.
+projection (word split, per-row gram fold, ``array_distinct`` per row)
+whose explode feeds a broadcast hash join that flags the grams that
+HIT the benchmark. One doc-keyed count then yields both totals; the
+grams of a doc all come from one input row, so the map-side combine
+leaves one slim (doc_id, n_grams, n_hits) partial per doc before the
+only exchange — no (doc, gram) row and no text ever moves.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _words(text_col):
-    """The repo-standard word split as an array<string> column."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+"),
-        lambda w: w != "",
-    )
+from n8n_tools_api_spark.operators.dsir import split_words
 
 
 def _grams_of(words, n: int):
     """DISTINCT word n-grams from a word array.  ``words`` MUST be a
-    bound column attribute (its own projection), never the inline
-    split expression: Spark does no common-subexpression elimination
-    inside higher-order-function lambdas, so an inline expression
-    would re-split the whole text once per gram — O(words²) per doc
-    (the lm_ppx 17× finding; at n=13 the slice alone re-walks 13
-    re-splits per position)."""
+    bound column attribute, and the gram array must be consumed by an
+    explode sitting directly on the projection that binds it (the
+    dsir ``exploded_buckets`` shape): Spark does no common-subexpression
+    elimination inside higher-order-function lambdas, and two adjacent
+    projections are merged by CollapseProject, which inlines the split
+    into every gram lambda — O(words²) per doc (the lm_ppx 17×
+    finding). A Generate node between the projections blocks the
+    merge."""
     nw = F.size(words)
     grams = (
         F.when(nw == 0, F.array().cast("array<string>"))
@@ -73,7 +68,7 @@ def benchmark_grams(bench: DataFrame, n: int = 13,
                     text_col: str = "text") -> DataFrame:
     """Distinct non-empty word ``n``-grams of an eval set: (gram)."""
     return (
-        bench.select(_words(F.col(text_col)).alias("_ws"))
+        bench.select(split_words(F.col(text_col)).alias("_ws"))
         .select(F.explode(_grams_of(F.col("_ws"), n)).alias("gram"))
         .where(F.col("gram") != "")
         .distinct()
@@ -82,49 +77,32 @@ def benchmark_grams(bench: DataFrame, n: int = 13,
 
 def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 13,
                         id_col: str = "doc_id", text_col: str = "text",
-                        bench_text_col: str = "text",
-                        broadcast_hits: bool = True) -> DataFrame:
+                        bench_text_col: str = "text") -> DataFrame:
     """Per-document benchmark-overlap report.
 
     Output: (doc_id, n_grams, n_hits, contaminated) — one row per
     input document; ``n_grams`` is the size of the doc's distinct gram
     set, ``n_hits`` how many of those grams appear in the benchmark,
     ``contaminated`` the hard-drop flag. Keep-list = NOT contaminated.
-
-    ``broadcast_hits`` hints the hit-count join-back as broadcast —
-    right when contamination is the expected sliver of the corpus.
-    When a large benchmark overlaps a large corpus fraction the hit
-    frame can outgrow a broadcast: pass ``False`` and the join-back
-    becomes a doc-keyed shuffle of two SLIM frames (the fat gram
-    arrays are dropped before the join either way).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    bgrams = benchmark_grams(bench, n=n, text_col=bench_text_col)
-    base = docs.select(
+    bgrams = benchmark_grams(bench, n=n, text_col=bench_text_col) \
+        .withColumn("_hit", F.lit(1))
+    # explode_OUTER keeps a wordless doc as one NULL-gram row, so the
+    # per-doc count covers every input document with no join back
+    grams = docs.select(
         F.col(id_col).alias("doc_id"),
-        _words(F.col(text_col)).alias("_ws"),
+        split_words(F.col(text_col)).alias("_ws"),
     ).select(
         "doc_id",
-        _grams_of(F.col("_ws"), n).alias("_grams"),
-    )
-    hits = (
-        base.select("doc_id", F.explode("_grams").alias("gram"))
-        .join(F.broadcast(bgrams), "gram")
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("bigint").alias("n_hits"))
+        F.explode_outer(_grams_of(F.col("_ws"), n)).alias("gram"),
     )
     return (
-        base.select("doc_id",
-                    F.size("_grams").cast("bigint").alias("n_grams"))
-        .join(F.broadcast(hits) if broadcast_hits else hits,
-              "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint")
-            .alias("n_hits"),
-            (F.coalesce(F.col("n_hits"), F.lit(0)) > 0)
-            .alias("contaminated"),
-        )
+        grams.join(F.broadcast(bgrams), "gram", "left")
+        .groupBy("doc_id")
+        .agg(F.count("gram").cast("bigint").alias("n_grams"),
+             F.count("_hit").cast("bigint").alias("n_hits"))
+        .select("doc_id", "n_grams", "n_hits",
+                (F.col("n_hits") > 0).alias("contaminated"))
     )

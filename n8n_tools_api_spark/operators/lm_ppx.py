@@ -84,16 +84,14 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from n8n_tools_api_spark.operators.dsir import split_words
+
 
 def token_buckets(text_col, bucket_hexlen: int = 3):
     """Hashed vocabulary-bucket keys of a text column, one per token
     occurrence in order, as an ``array<string>``."""
-    words = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+"),
-        lambda w: w != "",
-    )
     return F.transform(
-        words,
+        split_words(text_col),
         lambda w: F.substring(
             F.md5(F.concat(F.lit("ppx:"), w)), 1, bucket_hexlen),
     )
@@ -258,72 +256,63 @@ def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def ccnet_keep_list(docs: DataFrame, *,
                     train_seed: int = 271828, train_rate: float = 0.3,
                     tail_seed: int = 314159, tail_rate: float = 0.1,
-                    id_col: str = "doc_id", text_col: str = "text",
                     checkpoint_dir: str | None = None) -> DataFrame:
     """The composed CCNet pipeline in the paper's stage order (Wenzek
-    et al. 2020 §3): language ID → per-detected-language LM perplexity
-    → head/middle/tail split → disposition.  The reference's A6
-    char-coverage detector (the engine's language-ID stage, refsem —
-    the same function `operators/textstats.py:detect_language` runs)
-    stands in for fastText, grouping the LM by DETECTED language, not
-    any metadata column; pages the detector can't identify
-    (``unknown``: blank or best coverage ≤ 0.5) are gated out BEFORE
-    the LM, exactly like CCNet's lang-ID threshold.
+    et al. 2020 §3) over (doc_id, text) documents: language ID →
+    per-detected-language LM perplexity → head/middle/tail split →
+    disposition, as two ladder stages (operators/curation.py):
 
-    Disposition ladder (one status per input document):
-
-    * ``rejected_lang`` — detected ``unknown``; never reaches the LM,
-      so its n_bigrams/ppx/tile/bucket are NULL;
-    * ``rejected_empty`` — identified language but no bigram (< 2
-      words): bucket ``none``;
-    * ``kept_head`` / ``kept_middle`` — CCNet keeps these outright;
-    * ``kept_tail_sampled`` / ``rejected_tail`` — the tail third is
+    * lang — the reference's A6 char-coverage detector (the engine's
+      language-ID stage, refsem — the same function
+      `operators/textstats.py:detect_language` runs) stands in for
+      fastText, grouping the LM by DETECTED language, not any metadata
+      column; pages the detector can't identify (``unknown``: blank or
+      best coverage ≤ 0.5) are ``rejected_lang`` BEFORE the LM,
+      exactly like CCNet's lang-ID threshold;
+    * lm_bucket — ``rejected_empty`` for an identified page with no
+      bigram (< 2 words, bucket ``none``); ``kept_head`` /
+      ``kept_middle``, which CCNet keeps outright; and
+      ``kept_tail_sampled`` / ``rejected_tail``: the tail third is
       downsampled at ``tail_rate`` with the engine-portable md5-prefix
       key (operators/sampling.py), CCNet's "discard or subsample the
       tail" convention made deterministic.
 
     Output: (doc_id, detected, n_bigrams, ppx_q16, tile, bucket,
-    status).  Scale shape: the detector is one narrow Arrow stage
-    materialized ONCE (both the known and unknown branches read it —
-    the filter-and-union would otherwise run the UDF twice); the LM
+    status). Scale shape: the detector is one narrow Arrow stage (the
+    ladder cuts it, so the log and the LM read it once); the LM
     inherits lm_perplexity's broadcast shape; the only wide work
     beyond it is the report-scale ntile.
     """
-    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
+    from n8n_tools_api_spark.operators.curation import _ladder, _verdict
     from n8n_tools_api_spark.operators.sampling import (
         sample_key, sample_threshold_hex)
 
-    mat = RoundMaterializer(checkpoint_dir)
-    detected = mat(
-        docs.select(F.col(id_col).cast("string").alias("doc_id"),
-                    F.col(text_col).alias("text"))
-        .mapInPandas(_detect_batches, schema=_DETECT_SCHEMA),
-        "ccnet_detected", eager=False,
-    )
-    known = detected.where(F.col("detected") != "unknown")
-    train = sample_key(F.col("doc_id"), train_seed) \
-        < F.lit(sample_threshold_hex(train_rate))
-    scored = ccnet_buckets(lm_perplexity(
-        known, train, group_col="detected",
-        checkpoint_dir=checkpoint_dir))
-    kept = scored.select(
-        "doc_id",
-        F.col("grp").alias("detected"),
-        "n_bigrams", "ppx_q16", "tile", "bucket",
-        F.when(F.col("bucket") == "none", F.lit("rejected_empty"))
-        .when(F.col("bucket") == "head", F.lit("kept_head"))
-        .when(F.col("bucket") == "middle", F.lit("kept_middle"))
-        .when(sample_key(F.col("doc_id"), tail_seed)
-              < F.lit(sample_threshold_hex(tail_rate)),
-              F.lit("kept_tail_sampled"))
-        .otherwise(F.lit("rejected_tail")).alias("status"),
-    )
-    rejected = detected.where(F.col("detected") == "unknown").select(
-        "doc_id", "detected",
-        F.lit(None).cast("bigint").alias("n_bigrams"),
-        F.lit(None).cast("bigint").alias("ppx_q16"),
-        F.lit(None).cast("bigint").alias("tile"),
-        F.lit(None).cast("string").alias("bucket"),
-        F.lit("rejected_lang").alias("status"),
-    )
-    return kept.unionByName(rejected)
+    def lang(rows):
+        return rows.select(F.col("doc_id").cast("string").alias("doc_id"),
+                           "text") \
+            .mapInPandas(_detect_batches, schema=_DETECT_SCHEMA) \
+            .withColumn("status", _verdict(F.col("detected") != "unknown",
+                                           "rejected_lang"))
+
+    def lm_bucket(rows):
+        train = sample_key(F.col("doc_id"), train_seed) \
+            < F.lit(sample_threshold_hex(train_rate))
+        scored = ccnet_buckets(lm_perplexity(
+            rows, train, group_col="detected",
+            checkpoint_dir=checkpoint_dir))
+        return scored.select(
+            "doc_id",
+            F.col("grp").alias("detected"),
+            "n_bigrams", "ppx_q16", "tile", "bucket",
+            F.when(F.col("bucket") == "none", F.lit("rejected_empty"))
+            .when(F.col("bucket") == "head", F.lit("kept_head"))
+            .when(F.col("bucket") == "middle", F.lit("kept_middle"))
+            .when(sample_key(F.col("doc_id"), tail_seed)
+                  < F.lit(sample_threshold_hex(tail_rate)),
+                  F.lit("kept_tail_sampled"))
+            .otherwise(F.lit("rejected_tail")).alias("status"),
+        )
+
+    return _ladder(docs, [("lang", lang), ("lm_bucket", lm_bucket)],
+                   ["doc_id", "detected", "n_bigrams", "ppx_q16", "tile",
+                    "bucket", "status"], checkpoint_dir)

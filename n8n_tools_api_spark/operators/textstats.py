@@ -303,7 +303,19 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql import functions as F
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        *[c.alias(name)
+          for name, c in c4_line_columns(F.col(text_col)).items()],
+    )
+
+
+def c4_line_columns(text) -> dict:
+    """The :func:`c4_line_filter` output columns of a text column, by
+    name — for a caller that keeps its own columns beside them."""
+    from pyspark.sql import functions as F
+
+    t = F.coalesce(text, F.lit(""))
     lines = F.filter(
         F.transform(F.split(t, "\n"), lambda x: F.trim(x)),
         lambda x: x != "",
@@ -321,15 +333,14 @@ def c4_line_filter(docs: DataFrame, id_col: str = "doc_id",
                  lambda s: F.trim(s) != ""))
     has_lorem = F.lower(t).contains("lorem ipsum")
     has_brace = t.contains("{")
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        clean_text.alias("clean_text"),
-        F.size(kept).cast("int").alias("n_lines_kept"),
-        n_sentences.cast("int").alias("n_sentences"),
-        has_lorem.alias("has_lorem_ipsum"),
-        has_brace.alias("has_brace"),
-        (~has_lorem & ~has_brace & (n_sentences >= 3)).alias("c4_keep"),
-    )
+    return {
+        "clean_text": clean_text,
+        "n_lines_kept": F.size(kept).cast("int"),
+        "n_sentences": n_sentences.cast("int"),
+        "has_lorem_ipsum": has_lorem,
+        "has_brace": has_brace,
+        "c4_keep": ~has_lorem & ~has_brace & (n_sentences >= 3),
+    }
 
 
 def c4_badwords_filter(docs: DataFrame, badwords: list[str],

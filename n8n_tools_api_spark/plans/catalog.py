@@ -3998,7 +3998,7 @@ def benchmark_decontam_q(spark, sf_dir):
     benchmark set, overlap counts — closed-form from the same columns.
     The Spark plan is the scale shape documented in
     operators/decontaminate.py: broadcast benchmark grams, per-row
-    distinct-gram fold, only HITTING grams reach the doc-keyed count."""
+    distinct-gram fold, one map-side-combined doc-keyed count."""
     from n8n_tools_api_spark.operators.decontaminate import (
         ngram_decontaminate,
     )

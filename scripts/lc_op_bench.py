@@ -97,7 +97,7 @@ elif OP == "decontam":
     bench = (corpus.where(F.col("doc_id").startswith("r0_"))
              .select(words.alias("w")).where(F.size("w") >= 25)
              .select(F.array_join(F.slice("w", 5, 21), " ").alias("text")))
-    out = ngram_decontaminate(corpus, bench, n=13, broadcast_hits=False)
+    out = ngram_decontaminate(corpus, bench, n=13)
     rollup = out.agg(
         F.count("*").alias("docs"),
         F.sum(F.col("contaminated").cast("int")).cast("bigint")

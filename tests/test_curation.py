@@ -157,7 +157,7 @@ class TestCurationKeepList:
     def test_reliable_checkpoint_path_matches_local(self, spark, corpus,
                                                     exact_rows, tmp_path):
         """round-3 verdict #2: with checkpoint_dir set, every
-        intermediate (ranked frame, banded LSH, components rounds)
+        intermediate (exact-stage cut, banded LSH, components rounds)
         round-trips through parquet — output must be identical."""
         got = {r["doc_id"]: (r["status"], r["canonical"])
                for r in curation_keep_list(
@@ -171,14 +171,14 @@ class TestCurationKeepList:
         # layout: <dir>/<applicationId>/<namespace>/<tag> — the appId
         # level isolates concurrent driver processes sharing one dir,
         # and each RoundMaterializer instance gets its own namespace
-        # (the curation flow spawns three: ranked / banded / components)
+        # (the curation flow spawns three: ladder / banded / components)
         ck = str(tmp_path / "ck")
         apps = os.listdir(ck)
         assert apps == [spark.sparkContext.applicationId]
         app_dir = os.path.join(ck, apps[0])
         entries = {e for ns in os.listdir(app_dir)
                    for e in os.listdir(os.path.join(app_dir, ns))}
-        assert {"ranked", "banded", "edges"} <= entries
+        assert {"exact", "banded", "edges"} <= entries
 
 
 class TestWebCurationKeepList:
@@ -319,3 +319,102 @@ class TestWebDedupKeepList:
         assert out["b"].status == "url_dup"
         assert out["a"].status in ("kept", "exact_dup")
         assert out["c"].status == "kept"
+
+
+# ------------------------------------------------ the disposition contract
+
+_PAGE = TestWebCurationKeepList.PAGE
+_DISPOSITION = [("doc_id", "string"), ("status", "string"),
+                ("canonical", "string")]
+# the output schema of every keep-list chain, pinned as literals
+CHAIN_SCHEMAS = {
+    "curation_keep_list": _DISPOSITION,
+    "curation_with_quality": _DISPOSITION,
+    "c4_curation_keep_list": _DISPOSITION,
+    "web_curation_keep_list": _DISPOSITION,
+    "classifier_curation_keep_list": _DISPOSITION + [("score_q16", "bigint")],
+    "web_dedup_keep_list": _DISPOSITION + [("lines_dropped_within", "int"),
+                                           ("lines_dropped_boiler", "int")],
+    "ccnet_keep_list": [("doc_id", "string"), ("detected", "string"),
+                        ("n_bigrams", "bigint"), ("ppx_q16", "bigint"),
+                        ("tile", "bigint"), ("bucket", "string"),
+                        ("status", "string")],
+}
+CORPORA = {
+    "empty": [],
+    "one_doc": [("a", "https://ok1.example/a", _PAGE)],
+    "null_text": [("a", "https://ok1.example/a", None), ("b", None, None),
+                  ("c", "https://ok2.example/c", _PAGE)],
+}
+
+
+def _chain(spark, name, docs, **kw):
+    """Run one keep-list chain over (doc_id, url, text) documents."""
+    from n8n_tools_api_spark.operators import curation
+    from n8n_tools_api_spark.operators.lm_ppx import ccnet_keep_list
+
+    texts = docs.select("doc_id", "text")
+    if name == "web_curation_keep_list":
+        domains = spark.createDataFrame([("badsite.org",)], "domain string")
+        bench = spark.createDataFrame([("zz_never_matches",)], "text string")
+        return curation.web_curation_keep_list(
+            docs, domains, ["casino"], bench, **kw)
+    if name == "web_dedup_keep_list":
+        return curation.web_dedup_keep_list(docs, **kw)
+    if name == "classifier_curation_keep_list":
+        pos = spark.createDataFrame([("p", "golf hotel india juliet")],
+                                    "doc_id string, text string")
+        neg = spark.createDataFrame([("n", "short page junk words")],
+                                    "doc_id string, text string")
+        return curation.classifier_curation_keep_list(texts, pos, neg, **kw)
+    if name == "ccnet_keep_list":
+        return ccnet_keep_list(texts, **kw)
+    return getattr(curation, name)(texts, **kw)
+
+
+@pytest.mark.parametrize("corpus_name", sorted(CORPORA))
+@pytest.mark.parametrize("name", sorted(CHAIN_SCHEMAS))
+def test_chain_returns_one_row_per_doc_with_fixed_schema(spark, name,
+                                                         corpus_name):
+    rows = CORPORA[corpus_name]
+    docs = spark.createDataFrame(rows,
+                                 "doc_id string, url string, text string")
+    out = _chain(spark, name, docs)
+    assert [(f.name, f.dataType.simpleString())
+            for f in out.schema.fields] == CHAIN_SCHEMAS[name]
+    assert sorted(r["doc_id"] for r in out.collect()) == \
+        sorted(r[0] for r in rows)
+
+
+# parquet rounds written under checkpoint_dir on the corpus below; the
+# hand-built chains before the shared ladder wrote 9 (web) and 4
+# (classifier) on it
+RELIABLE_ROUNDS = {"web_curation_keep_list": 9,
+                   "classifier_curation_keep_list": 4}
+
+
+@pytest.mark.parametrize("name", sorted(RELIABLE_ROUNDS))
+def test_reliable_mode_writes_no_extra_rounds(spark, name, tmp_path,
+                                              monkeypatch):
+    from n8n_tools_api_spark.operators.materialize import RoundMaterializer
+
+    written = []
+    cut = RoundMaterializer.__call__
+
+    def counting(self, df, tag, eager=True):
+        if self.checkpoint_dir is not None:
+            written.append(tag)
+        return cut(self, df, tag, eager)
+
+    monkeypatch.setattr(RoundMaterializer, "__call__", counting)
+    near = _PAGE.rsplit("\n", 1)[0]
+    docs = spark.createDataFrame(
+        [("a", "https://ok1.example/a", _PAGE),
+         ("b", "https://ok2.example/b", _PAGE),
+         ("c", "https://ok3.example/c", near),
+         ("d", "https://badsite.org/d", _PAGE),
+         ("e", "https://ok4.example/e", "short { page")],
+        "doc_id string, url string, text string")
+    out = _chain(spark, name, docs, checkpoint_dir=str(tmp_path / "ck"))
+    assert out.count() == 5
+    assert len(written) <= RELIABLE_ROUNDS[name], written
